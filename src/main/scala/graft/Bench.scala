@@ -89,7 +89,7 @@ object Bench {
     // truncated the (long) stdout line, losing q01-q24's times — the file
     // is the machine-readable artifact per-query diffs read.
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/BENCH_LATEST.json"),
+      java.nio.file.Paths.get("BENCH_LATEST.json"),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case t: Throwable =>
       System.err.println(s"[bench] BENCH_LATEST.json write failed: ${t.getMessage}") }

@@ -56,8 +56,8 @@ object Ann {
   }
 
   /** Sign-bucket key: bit p = 1 iff dot(v, plane_p) > 0. Native one-pass
-    * kernel ([[graft.functions.SignBucketD]]) — the HOF twin below is the
-    * parity-spec reference (identical LCG planes and fold order).
+    * kernel ([[graft.functions.SignBucketD]]) — the HOF twin below is
+    * KernelParitySpec's reference (identical LCG planes and fold order).
     */
   def signBucket(v: Column, planes: Int): Column =
     graft.functions.SignBucketD(v, planes)

@@ -92,13 +92,11 @@ object Dedup {
     *   jobs. 50k pairs ≈ ~2 MB broadcast: safe on any driver. 0 disables
     *   (pure BSP; spec-proven equivalent).
     */
-  /** Observability for the last [[resolveClusters]] run (BSP rounds used;
-    * whether the driver finish closed the tail) — read by the CC scale
-    * bench and the convergence-bound specs. Best-effort under concurrency
-    * (one CC run at a time is the engine's own usage).
+  /** BSP rounds the last [[resolveClusters]] run used — read by the
+    * convergence-bound spec. Best-effort under concurrency (one CC run at
+    * a time is the engine's own usage).
     */
   @volatile private[graft] var lastCcRounds: Int = 0
-  @volatile private[graft] var lastCcDriverFinished: Boolean = false
 
   /** The id ordering BOTH driver union-find finishes use: for strings,
     * UTF-8 binary order (`UTF8String.compareTo`) — what Spark's `min`
@@ -182,7 +180,6 @@ object Dedup {
           org.apache.spark.sql.types.StructField("cluster_id", dt)))
         val rows = nodes.toSeq.map(n => org.apache.spark.sql.Row(n, find(n)))
         lastCcRounds = 0
-        lastCcDriverFinished = true
         return spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), schema)
       }
@@ -256,7 +253,6 @@ object Dedup {
             coalesce(col("__root"), col("label")).as("label")), reliable = true)
       true
     }
-    lastCcDriverFinished = false
     while (!converged && round < maxRounds) {
       round += 1
       try {
@@ -304,7 +300,6 @@ object Dedup {
         if (!converged && driverFinishEdges > 0 && finishAttempts > 0 &&
             changed <= driverFinishEdges) {
           converged = tryDriverFinish()
-          if (converged) lastCcDriverFinished = true
         }
       } catch {
         case e: org.apache.spark.SparkException =>
@@ -364,7 +359,7 @@ object Dedup {
       .where(size(col("sh")) > 0)
       // sig + band keys in ONE native pass over the shingle array
       // ([[graft.functions.MinhashBandKeys]]; declarative composition
-      // bandKeys(minhashSig(sh)) is the spec-pinned parity twin)
+      // bandKeys(minhashSig(sh)) is its twin, pinned by KernelParitySpec)
       .withColumn("bkeys",
         graft.functions.MinhashBandKeys(col("sh"), numHashes, bands))
       // materialize the per-doc prep once: the self-join + payload re-fetch
@@ -449,7 +444,7 @@ object Dedup {
   /** [[dedupDocs]] over an existing prep frame — lets composite operators
     * ([[dedupIncremental]]) reuse one scan for every pass.
     */
-  private[text] def dedupDocsFromPrepped(
+  private def dedupDocsFromPrepped(
       ids: DataFrame,
       prepped: DataFrame,
       idCol: String,
@@ -601,7 +596,10 @@ object Dedup {
     * into their buckets, and the sketches are rebuilt from the SIGNATURE
     * TABLE (columnar, no corpus text, no re-shingle) so the next day's
     * [[dedupIncrementalBloomIndexed]] admits against the grown corpus.
-    * `nBuckets` must match the original [[writeIndex]] call.
+    * `nBuckets` must match the original [[writeIndex]] call. An index
+    * that carries Bloom blobs must be appended with `bloomFpp` set:
+    * without the refresh the blobs would miss the appended rows, and the
+    * next ingest would admit exact copies of them.
     */
   def appendIndex(
       admitted: DataFrame,
@@ -613,6 +611,9 @@ object Dedup {
       nBuckets: Int = 32,
       bloomFpp: Option[Double] = None
   ): Unit = {
+    require(bloomFpp.isDefined || Seq("bloom-digest", "bloom-shingle")
+      .forall(graft.lake.IcebergLite.getBlob(root, _).isEmpty),
+      s"index at $root has Bloom blobs; appendIndex needs bloomFpp to refresh them")
     val prep = admitted.select(
       col(idCol).as("id"), blockKey.as("blk"),
       TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
@@ -712,9 +713,6 @@ object Dedup {
     * optimalNumOfBits(n, fpp) rule `BloomFilter.create(n, fpp)` applies,
     * so the serialized bytes are identical to the stat path's.
     */
-  private[text] def bloomAggColAccess(key: org.apache.spark.sql.Column,
-      n: Long, fpp: Double): org.apache.spark.sql.Column = bloomAggCol(key, n, fpp)
-
   private def bloomAggCol(key: org.apache.spark.sql.Column, n: Long,
       fpp: Double): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.GraftBridge
@@ -1014,7 +1012,7 @@ object Dedup {
     * self passes (the round-4 shape recomputed it once per PPJoin call,
     * the measured residual of q62/q84).
     */
-  private[text] def shingleFreq(sides: Seq[DataFrame]): DataFrame =
+  private def shingleFreq(sides: Seq[DataFrame]): DataFrame =
     sides.map(longForm).reduce(_ unionByName _)
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
 
@@ -1023,7 +1021,7 @@ object Dedup {
     * window partitions by id, filtering this frame by id yields exactly
     * the prefix of the retained docs — subsets need no re-rank.
     */
-  private[text] def prefixOf(
+  private def prefixOf(
       prepped: DataFrame, freq: DataFrame, threshold: Double): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id")).orderBy(col("df"), col("shingle"))
@@ -1039,7 +1037,7 @@ object Dedup {
     * cached frames. `a`/payload pairs: (prefix frame, prep frame); self
     * mode when `b` is None.
     */
-  private[text] def ppjoinFromPrefixed(
+  private def ppjoinFromPrefixed(
       aPrefix: DataFrame,
       a: DataFrame,
       b: Option[(DataFrame, DataFrame)],

@@ -157,10 +157,9 @@ class Round5Spec extends GraftSuite {
 
   test("resolveClusters convergence bound: a 10^5-edge chain closes within log2(n)+1 rounds") {
     // the long chain is CC's worst case (diameter = edge count); pointer
-    // jumping must keep rounds logarithmic. The full-scale (10^7-edge)
-    // evidence run lives in graft.run.CcBench / BASELINE.md; this pins the
-    // same bound at spec scale, driver finish DISABLED so the bound tests
-    // pure BSP propagation.
+    // jumping must keep rounds logarithmic. The 10^7-edge run recorded in
+    // BASELINE.md §6 met the same bound; this pins it at spec scale, driver
+    // finish DISABLED so the bound tests pure BSP propagation.
     val n = 100000L
     val pairs = spark.range(n)
       .select(col("id").as("id_a"), (col("id") + 1L).as("id_b"))

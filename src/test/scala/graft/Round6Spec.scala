@@ -273,6 +273,14 @@ class Round6IngestSpec extends GraftSuite {
     def slice(d: Long) = docs.where(pmod(col("doc_id"), lit(4L)) === d)
     Dedup.writeIndex(slice(0), "doc_id", "text", col("lang"), 3, root,
       nBuckets = 4, bloomFpp = Some(0.03))
+    // an append without the Bloom refresh would leave blobs that admit
+    // copies of the appended docs: it must be refused before it writes
+    val indexed = Dedup.readIndex(spark, root).count()
+    intercept[IllegalArgumentException] {
+      Dedup.appendIndex(slice(1).limit(1), "doc_id", "text", col("lang"), 3,
+        root, nBuckets = 4)
+    }
+    assert(Dedup.readIndex(spark, root).count() === indexed)
     var admittedSoFar = Seq.empty[org.apache.spark.sql.DataFrame]
     for (day <- 1 to 3) {
       val batch = slice(day.toLong)
