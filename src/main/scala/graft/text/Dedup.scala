@@ -92,13 +92,14 @@ object Dedup {
     *   jobs. 50k pairs ≈ ~2 MB broadcast: safe on any driver. 0 disables
     *   (pure BSP; spec-proven equivalent).
     */
-  /** BSP rounds the last [[resolveClusters]] run used — read by the
-    * convergence-bound spec. Best-effort under concurrency (one CC run at
-    * a time is the engine's own usage).
+  /** BSP rounds the last [[resolveClusters]] run used (0: the small-graph
+    * shortcut took the whole graph) — read by the convergence-bound spec.
+    * Best-effort under concurrency (one CC run at a time is the engine's
+    * own usage).
     */
   @volatile private[graft] var lastCcRounds: Int = 0
 
-  /** The id ordering BOTH driver union-find finishes use: for strings,
+  /** The id ordering the driver union-find uses: for strings,
     * UTF-8 binary order (`UTF8String.compareTo`) — what Spark's `min`
     * aggregation applies on the BSP path — NOT Java's UTF-16 code-unit
     * order (they diverge on non-BMP code points: surrogates sort above
@@ -111,6 +112,32 @@ object Dedup {
       org.apache.spark.unsafe.types.UTF8String.fromString(a)
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
     case _ => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
+  }
+
+  /** Min-root union-find over collected (x, y) edge rows — the driver
+    * side of BOTH [[resolveClusters]] finishes (the small-graph shortcut
+    * and the BSP tail). Returns (node, root) for every node in first-seen
+    * order, the root being its component's [[minLess]]-minimum: the same
+    * label min-propagation converges to, whatever the edge order, and
+    * duplicate edges are no-ops.
+    */
+  private def minRoots(edges: Array[org.apache.spark.sql.Row]): Seq[(Any, Any)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    val nodes = scala.collection.mutable.LinkedHashSet.empty[Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { e =>
+      val (a, b) = (e.get(0), e.get(1))
+      nodes += a; nodes += b
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (minLess(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    nodes.toSeq.map(n => (n, find(n)))
   }
 
   def resolveClusters(
@@ -137,6 +164,14 @@ object Dedup {
     val reliableEvery = 4
     def truncated(df: DataFrame, reliable: Boolean): DataFrame =
       if (reliable && reliableOk) df.checkpoint() else df.localCheckpoint()
+    // a driver union-find result as a one-partition (x, y) frame
+    def driverFrame(rows: Seq[(Any, Any)], dt: org.apache.spark.sql.types.DataType,
+        x: String, y: String): DataFrame = {
+      import org.apache.spark.sql.types.{StructField, StructType}
+      pairs.sparkSession.createDataFrame(
+        sc.parallelize(rows.map { case (a, b) => org.apache.spark.sql.Row(a, b) }, 1),
+        StructType(Seq(StructField(x, dt), StructField(y, dt))))
+    }
     val raw = pairs.select(col(idA).as("a"), col(idB).as("b"))
       .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
     // SMALL-GRAPH SHORTCUT: when the whole (doubled) edge set fits the
@@ -154,34 +189,8 @@ object Dedup {
     if (driverFinishEdges > 0) {
       val sample = raw.limit(2 * driverFinishEdges + 1).collect()
       if (sample.length <= 2 * driverFinishEdges) {
-        val less = minLess _
-        val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-        def find(x: Any): Any = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        val nodes = scala.collection.mutable.LinkedHashSet.empty[Any]
-        sample.foreach { e =>
-          val (a, b) = (e.get(0), e.get(1))
-          nodes += a; nodes += b
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-        }
-        if (sys.env.contains("GRAFT_DEBUG_CC"))
-          System.err.println(
-            s"[cc] small-graph shortcut: edges=${sample.length} nodes=${nodes.size}")
-        val spark = pairs.sparkSession
-        val dt = raw.schema("a").dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", dt),
-          org.apache.spark.sql.types.StructField("cluster_id", dt)))
-        val rows = nodes.toSeq.map(n => org.apache.spark.sql.Row(n, find(n)))
         lastCcRounds = 0
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), schema)
+        return driverFrame(minRoots(sample), raw.schema("a").dataType, "id", "cluster_id")
       }
     }
     val edges = materialize(raw.distinct())
@@ -206,7 +215,6 @@ object Dedup {
     // string ids by UTF-8 bytes — identical to the BSP path's Spark `min`
     // for EVERY string, non-BMP included (round-5 advisor finding).
     def tryDriverFinish(): Boolean = {
-      val spark = pairs.sparkSession
       val la = labels.select(col("id").as("a"), col("label").as("la"))
       val lb = labels.select(col("id").as("b"), col("label").as("lb"))
       val cross = edges.join(la, Seq("a")).join(lb, Seq("b"))
@@ -219,34 +227,9 @@ object Dedup {
       val active = cross.unionByName(chains).distinct()
         .limit(driverFinishEdges + 1).collect()
       if (active.length > driverFinishEdges) { finishAttempts -= 1; return false }
-      val less = minLess _
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      active.foreach { e =>
-        val (rx, ry) = (find(e.get(0)), find(e.get(1)))
-        if (rx != ry) {
-          if (less(rx, ry)) parent(ry) = rx else parent(rx) = ry
-        }
-      }
-      val corr = parent.keys.toSeq.map(l => (l, find(l)))
-        .filter { case (l, r) => l != r }
-        .map { case (l, r) => org.apache.spark.sql.Row(l, r) }
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(
-          s"[cc] driver finish: active=${active.length} corrections=${corr.size}")
+      val corr = minRoots(active).filter { case (l, r) => l != r }
       if (corr.isEmpty) return true // chains already closed — nothing to fix
-      val dt = labels.schema("label").dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("label", dt),
-        org.apache.spark.sql.types.StructField("__root", dt)))
-      val corrDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(corr, 1), schema)
+      val corrDf = driverFrame(corr, labels.schema("label").dataType, "label", "__root")
       labels = truncated(
         labels.join(broadcast(corrDf), Seq("label"), "left")
           .select(col("id"),
@@ -290,8 +273,6 @@ object Dedup {
         val m = obs.get
         val changed = Option(m("changed")).fold(0L)(_.asInstanceOf[Long])
         converged = changed == 0L
-        if (sys.env.contains("GRAFT_DEBUG_CC"))
-          System.err.println(s"[cc] round=$round changed=$changed")
         labels = jumped
         retries = 0 // a good round clears the consecutive-failure budget:
         // 3 transient faults spread over a long job must not kill the 4th
@@ -413,12 +394,30 @@ object Dedup {
       textCol: String,
       blockKey: org.apache.spark.sql.Column,
       shingleN: Int
-  ): DataFrame = materialize(
+  ): DataFrame = materialize(prepFrame(df, idCol, textCol, blockKey, shingleN))
+
+  /** The per-doc prep projection (id, blk, sh, __md5, sz), unmaterialized
+    * — the ONE definition of the signature schema that [[prepDocs]]
+    * caches and the dedup index ([[writeIndex]], [[appendIndex]]) stores.
+    */
+  private[graft] def prepFrame(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      blockKey: org.apache.spark.sql.Column,
+      shingleN: Int
+  ): DataFrame =
     df.select(
       col(idCol).as("id"), blockKey.as("blk"),
       TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
       md5(col(textCol)).as("__md5"))
-      .withColumn("sz", size(col("sh"))))
+      .withColumn("sz", size(col("sh")))
+
+  /** An index table's rows as a cached prep frame (the `bucket` column and
+    * any other extras projected away).
+    */
+  private def indexPrep(index: DataFrame): DataFrame =
+    materialize(index.select(col("id"), col("blk"), col("sh"), col("__md5"), col("sz")))
 
   /** End-to-end document dedup: exact duplicates (same text digest) and
     * near-duplicates (exact n-gram Jaccard ≥ threshold via the PPJoin path)
@@ -438,21 +437,9 @@ object Dedup {
       shingleN: Int = 3,
       threshold: Double = 0.7
   ): DataFrame =
-    dedupDocsFromPrepped(df.select(col(idCol)),
-      prepDocs(df, idCol, textCol, blockKey, shingleN), idCol, threshold)
-
-  /** [[dedupDocs]] over an existing prep frame — lets composite operators
-    * ([[dedupIncremental]]) reuse one scan for every pass.
-    */
-  private def dedupDocsFromPrepped(
-      ids: DataFrame,
-      prepped: DataFrame,
-      idCol: String,
-      threshold: Double,
-      prefix: Option[DataFrame] = None
-  ): DataFrame =
-    ids.join(dupIdsFromPrepped(prepped, threshold, prefix)
-      .select(col("id").as(idCol)), Seq(idCol), "left_anti")
+    df.select(col(idCol)).join(
+      dupIdsFromPrepped(prepDocs(df, idCol, textCol, blockKey, shingleN), threshold, None)
+        .select(col("id").as(idCol)), Seq(idCol), "left_anti")
 
   /** The ids a batch-internal dedup REMOVES (cluster members that are not
     * their cluster's min-id keeper) — factored out so composite operators
@@ -504,40 +491,57 @@ object Dedup {
       blockKey: org.apache.spark.sql.Column,
       shingleN: Int = 3,
       threshold: Double = 0.7
-  ): DataFrame =
-    dedupIncrementalPrepped(batch,
-      prepDocs(batch, idCol, textCol, blockKey, shingleN),
-      prepDocs(corpus, idCol, textCol, blockKey, shingleN),
-      idCol, threshold)
+  ): DataFrame = {
+    val bp = prepDocs(batch, idCol, textCol, blockKey, shingleN)
+    val cp = prepDocs(corpus, idCol, textCol, blockKey, shingleN)
+    admit(batch, bp, cp, materialize(shingleFreq(Seq(bp, cp))),
+      lit(true), lit(true), idCol, threshold)
+  }
 
-  private def dedupIncrementalPrepped(
+  /** THE admission body of every incremental-dedup entry, over prepped
+    * sides. `freq` is the materialized union-wide rarity order: ONE
+    * rarity order + ONE ranked prefix frame per side, shared by BOTH
+    * PPJoin passes (batch×corpus cross, batch self) — the prefix theorem
+    * holds for any fixed total order, so the union-wide df table serves
+    * the self pass too. Round 4 rebuilt freq + prefix inside each
+    * ppjoinFromPrepped call — the measured q62/q84 residual. freq is
+    * materialized (round 6) because both prefix frames consume it; the
+    * cached (shingle, df) rows are narrow, and the cache also gives the
+    * planner real size stats for the prefix join. (It caches the narrow
+    * AGGREGATE; the round-5 regression came from caching the exploded
+    * long-form rows, which are corpus-sized.)
+    *
+    * `digestFilter` (over prep rows) and `shingleFilter` (over prefix
+    * rows) are the corpus-facing prefilters: `might_contain` over the
+    * Bloom sketches, or `lit(true)`, which the optimizer's PruneFilters
+    * removes, leaving the plain entries' plans unfiltered. Each is exact:
+    * a batch row the digest sketch rejects has no corpus digest twin, and
+    * a batch prefix row whose shingle the corpus sketch rejects can never
+    * produce a candidate (candidates need an equal corpus shingle, and
+    * Bloom filters have no false negatives) — so every entry admits the
+    * identical set.
+    */
+  private def admit(
       batch: DataFrame,
       bp: DataFrame,
       cp: DataFrame,
+      freq: DataFrame,
+      digestFilter: org.apache.spark.sql.Column,
+      shingleFilter: org.apache.spark.sql.Column,
       idCol: String,
       threshold: Double
   ): DataFrame = {
-    // ONE rarity order + ONE ranked prefix frame per side, shared by BOTH
-    // PPJoin passes (batch×corpus cross, batch self): the prefix theorem
-    // holds for any fixed total order, so the union-wide df table serves
-    // the self pass too. Round 4 rebuilt freq + prefix inside each
-    // ppjoinFromPrepped call — the measured q62/q84 residual. freq is
-    // MATERIALIZED (round 6): two prefix frames consume it, and lazy it
-    // was aggregated once inside EACH prefix materialization; the cached
-    // (shingle, df) rows are narrow, and the cache also gives the planner
-    // real size stats for the prefix join (broadcast when vocabulary-
-    // sized). Note this caches the AGGREGATE — the round-5 regression was
-    // from caching the exploded long-form table, which is corpus-sized.
-    val freq = materialize(shingleFreq(Seq(bp, cp)))
     val bpPrefix = materialize(prefixOf(bp, freq, threshold))
     val cpPrefix = materialize(prefixOf(cp, freq, threshold))
     // exact collisions with the corpus: digest semi-join (never the text;
     // no distinct on the corpus side — semi joins ignore right-side dups)
-    val exactHit = bp.select(col("id"), col("__md5"))
+    val exactHit = bp.where(digestFilter)
+      .select(col("id"), col("__md5"))
       .join(cp.select(col("__md5")), Seq("__md5"), "left_semi")
       .select(col("id"))
     // near collisions with the corpus: cross-table prefix-filtered jaccard
-    val nearHit = ppjoinFromPrefixed(cpPrefix, cp, Some((bpPrefix, bp)), threshold)
+    val nearHit = ppjoinFromPrefixed(cpPrefix, cp,
+        Some((bpPrefix.where(shingleFilter), bp)), threshold)
       .select(col("id_b").as("id"))
     // ONE anti join against the union of every exclusion set (batch-
     // internal cluster dups, corpus exact hits, corpus near hits) — was
@@ -557,6 +561,9 @@ object Dedup {
     * a few hundred bytes/doc — never the corpus text. Admitted batches
     * append their own prep rows to the index (same schema), so the index
     * grows with the corpus and stays its single source of dedup truth.
+    * With `bloomFpp` set the ingest Bloom sketches are persisted as
+    * snapshot blobs, consumed by every subsequent
+    * [[dedupIncrementalBloomIndexed]] ingest with zero corpus scans.
     */
   def writeIndex(
       corpus: DataFrame,
@@ -567,39 +574,20 @@ object Dedup {
       root: String,
       nBuckets: Int = 32,
       bloomFpp: Option[Double] = None
-  ): Unit = {
-    val prep = corpus.select(
-      col(idCol).as("id"), blockKey.as("blk"),
-      TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
-      md5(col(textCol)).as("__md5"))
-      .withColumn("sz", size(col("sh")))
-    graft.lake.IcebergLite.writeTable(prep, root,
-      pmod(graft.functions.PolyHash(col("blk").cast("string")), lit(nBuckets.toLong)),
-      nBuckets, lineage = s"dedup-index(shingleN=$shingleN)")
-    // Persist the ingest Bloom sketches as snapshot blobs: built ONCE here
-    // (off the just-written signature table — columnar read, no re-shingle,
-    // no corpus text), consumed by every subsequent
-    // [[dedupIncrementalBloomIndexed]] ingest with zero corpus scans.
-    bloomFpp.foreach { fpp =>
-      val idx = readIndex(corpus.sparkSession, root)
-      val (dg, sh) = bloomPairOf(idx, fpp)
-      graft.lake.IcebergLite.putBlob(root, "bloom-digest", dg)
-      graft.lake.IcebergLite.putBlob(root, "bloom-shingle", sh)
-      graft.lake.IcebergLite.appendMetrics(root,
-        s"""{"job":"dedup-index-blooms","fpp":$fpp}""")
-    }
-  }
+  ): Unit =
+    putIndex(prepFrame(corpus, idCol, textCol, blockKey, shingleN), shingleN,
+      root, nBuckets, bloomFpp, org.apache.spark.sql.SaveMode.Overwrite)
 
   /** Append a day's ADMITTED documents to a persisted dedup index and
     * refresh its Bloom blobs — the loop step of multi-day ingest: the new
     * rows are prepped once (the only text access, batch-sized), appended
     * into their buckets, and the sketches are rebuilt from the SIGNATURE
-    * TABLE (columnar, no corpus text, no re-shingle) so the next day's
-    * [[dedupIncrementalBloomIndexed]] admits against the grown corpus.
-    * `nBuckets` must match the original [[writeIndex]] call. An index
-    * that carries Bloom blobs must be appended with `bloomFpp` set:
-    * without the refresh the blobs would miss the appended rows, and the
-    * next ingest would admit exact copies of them.
+    * TABLE so the next day's [[dedupIncrementalBloomIndexed]] admits
+    * against the grown corpus. `nBuckets` must match the original
+    * [[writeIndex]] call. An index that carries Bloom blobs must be
+    * appended with `bloomFpp` set: without the refresh the blobs would
+    * miss the appended rows, and the next ingest would admit exact copies
+    * of them.
     */
   def appendIndex(
       admitted: DataFrame,
@@ -614,21 +602,35 @@ object Dedup {
     require(bloomFpp.isDefined || Seq("bloom-digest", "bloom-shingle")
       .forall(graft.lake.IcebergLite.getBlob(root, _).isEmpty),
       s"index at $root has Bloom blobs; appendIndex needs bloomFpp to refresh them")
-    val prep = admitted.select(
-      col(idCol).as("id"), blockKey.as("blk"),
-      TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
-      md5(col(textCol)).as("__md5"))
-      .withColumn("sz", size(col("sh")))
-    graft.lake.IcebergLite.appendTable(prep, root,
+    putIndex(prepFrame(admitted, idCol, textCol, blockKey, shingleN), shingleN,
+      root, nBuckets, bloomFpp, org.apache.spark.sql.SaveMode.Append)
+  }
+
+  /** The one dedup-index write: prep rows land in their block-key bucket
+    * (`mode` overwrites or appends), then, with `bloomFpp` set, both Bloom
+    * blobs are rebuilt off the whole signature table just committed —
+    * columnar read, no re-shingle, no corpus text.
+    */
+  private def putIndex(
+      prep: DataFrame,
+      shingleN: Int,
+      root: String,
+      nBuckets: Int,
+      bloomFpp: Option[Double],
+      mode: org.apache.spark.sql.SaveMode
+  ): Unit = {
+    val job =
+      if (mode == org.apache.spark.sql.SaveMode.Append) "dedup-index-append"
+      else "dedup-index"
+    graft.lake.IcebergLite.write(prep, root,
       pmod(graft.functions.PolyHash(col("blk").cast("string")), lit(nBuckets.toLong)),
-      nBuckets, lineage = s"dedup-index-append(shingleN=$shingleN)")
+      nBuckets, s"$job(shingleN=$shingleN)", mode)
     bloomFpp.foreach { fpp =>
-      val idx = readIndex(admitted.sparkSession, root)
-      val (dg, sh) = bloomPairOf(idx, fpp)
+      val (dg, sh) = bloomPairOf(readIndex(prep.sparkSession, root), fpp)
       graft.lake.IcebergLite.putBlob(root, "bloom-digest", dg)
       graft.lake.IcebergLite.putBlob(root, "bloom-shingle", sh)
       graft.lake.IcebergLite.appendMetrics(root,
-        s"""{"job":"dedup-index-bloom-refresh","fpp":$fpp}""")
+        s"""{"job":"$job-blooms","fpp":$fpp}""")
     }
   }
 
@@ -647,12 +649,12 @@ object Dedup {
       blockKey: org.apache.spark.sql.Column,
       shingleN: Int = 3,
       threshold: Double = 0.7
-  ): DataFrame =
-    dedupIncrementalPrepped(batch,
-      prepDocs(batch, idCol, textCol, blockKey, shingleN),
-      materialize(index.select(col("id"), col("blk"), col("sh"),
-        col("__md5"), col("sz"))),
-      idCol, threshold)
+  ): DataFrame = {
+    val bp = prepDocs(batch, idCol, textCol, blockKey, shingleN)
+    val cp = indexPrep(index)
+    admit(batch, bp, cp, materialize(shingleFreq(Seq(bp, cp))),
+      lit(true), lit(true), idCol, threshold)
+  }
 
   /** Bloom-prefiltered ingest against a PERSISTED index whose sketches
     * were written by [[writeIndex]]`(bloomFpp = Some(...))`: daily ingest
@@ -671,68 +673,24 @@ object Dedup {
       shingleN: Int = 3,
       threshold: Double = 0.7
   ): DataFrame = {
-    val spark = batch.sparkSession
     def blob(k: String) = graft.lake.IcebergLite.getBlob(root, k).getOrElse(
       throw new IllegalStateException(
         s"index at $root has no '$k' sketch — writeIndex with bloomFpp set"))
-    val cp = materialize(readIndex(spark, root)
-      .select(col("id"), col("blk"), col("sh"), col("__md5"), col("sz")))
-    dedupIncrementalBloomPrepped(batch,
-      prepDocs(batch, idCol, textCol, blockKey, shingleN), cp,
-      blob("bloom-digest"), blob("bloom-shingle"), idCol, threshold)
-  }
-
-  /** Serialized Bloom filter over a long-key column — built with Spark's
-    * native sketch aggregation (one pass, partial-merged, KB-MB result).
-    * At production scale the bytes persist alongside the dedup index
-    * ([[graft.lake.IcebergLite]] puts them in a snapshot property) so daily
-    * ingests never rescan the corpus to rebuild them.
-    */
-  private[graft] def bloomOf(keys: DataFrame, keyCol: String, fpp: Double): Array[Byte] = {
-    // size by (approximate) DISTINCT keys: count() counts occurrences, and
-    // a shingle frame repeats each shingle once per document — sizing from
-    // occurrences inflates the sketch 10-100x and past ~10^13 occurrences
-    // exceeds the bit-array limit outright. approx_count_distinct at
-    // rsd=0.01 (vs the ~5% default) keeps a 1.1 margin > 10 sigma of the
-    // estimator — an undersized filter would EXCEED the requested fpp and,
-    // in incremental dedup, silently drop novel documents.
-    val n = math.max(
-      (keys.agg(approx_count_distinct(col(keyCol), 0.01)).head().getLong(0) *
-        1.1).toLong, 64L)
-    val bf = keys.stat.bloomFilter(keyCol, n, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** Native codegen Bloom aggregation (`bloom_filter_agg`): the same
-    * BloomFilterImpl bytes `stat.bloomFilter` builds, but as a Catalyst
-    * partial-merged aggregate — whole-stage codegen, no RDD row
-    * conversion, and (the point) several filters build in ONE pass when
-    * the key columns share a frame. numBits follows the same
-    * optimalNumOfBits(n, fpp) rule `BloomFilter.create(n, fpp)` applies,
-    * so the serialized bytes are identical to the stat path's.
-    */
-  private def bloomAggCol(key: org.apache.spark.sql.Column, n: Long,
-      fpp: Double): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.GraftBridge
-    val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, fpp)
-    GraftBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        GraftBridge.expression(key),
-        GraftBridge.expression(lit(n)),
-        GraftBridge.expression(lit(bits))).toAggregateExpression())
+    val (digestBloom, shingleBloom) = (blob("bloom-digest"), blob("bloom-shingle"))
+    val cp = indexPrep(readIndex(batch.sparkSession, root))
+    val bp = prepDocs(batch, idCol, textCol, blockKey, shingleN)
+    admit(batch, bp, cp, materialize(shingleFreq(Seq(bp, cp))),
+      mightContain(digestBloom, xxhash64(col("__md5"))),
+      mightContain(shingleBloom, col("shingle")), idCol, threshold)
   }
 
   /** BOTH ingest sketches (digest bloom, shingle bloom) of a prep/index
-    * frame in TWO total passes instead of four: one exploded scan sizes
-    * both filters (HLL over the same distinct sets the old per-filter
-    * passes saw — identical estimates), one builds both via
-    * [[bloomAggCol]]. Bloom inserts are idempotent, so feeding the digest
-    * key once per shingle (the exploded grain; explode_outer keeps
-    * zero-shingle docs) sets exactly the bits the row-grain build set —
-    * byte-identical sketches, half the corpus scans (guide §1.2: fewer
-    * passes first). Sizing margins match [[bloomOf]].
+    * frame in TWO total passes: one exploded scan sizes both filters (HLL
+    * over the distinct digests and distinct shingles), one builds both
+    * via [[bloomPairSizedOf]]. Bloom inserts are idempotent, so feeding
+    * the digest key once per shingle (the exploded grain; explode_outer
+    * keeps zero-shingle docs) sets exactly the bits the row-grain build
+    * set — half the corpus scans (guide §1.2: fewer passes first).
     */
   private[graft] def bloomPairOf(prep: DataFrame, fpp: Double): (Array[Byte], Array[Byte]) = {
     val keys = prep.select(xxhash64(col("__md5")).as("dk"),
@@ -761,14 +719,40 @@ object Dedup {
     * covers a superset side union), so the HLL sizing pass over the
     * exploded signature frame disappears entirely. Oversizing only
     * lowers realized fpp; admissions are invariant at any size.
+    *
+    * The ONE Bloom builder: Spark's native codegen aggregation
+    * (`bloom_filter_agg`, partial-merged, both filters in one pass over
+    * the shared frame). numBits follows the optimalNumOfBits(n, fpp) rule
+    * `BloomFilter.create(n, fpp)` applies, and the bytes are a
+    * BloomFilterImpl serialization that `BloomFilter.readFrom` reads
+    * back. The aggregate silently clamps n and numBits to the session's
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` / `maxNumBits`
+    * (a smaller filter than asked, so a higher realized fpp); a request
+    * above either limit throws `IllegalArgumentException` instead.
     */
   private[graft] def bloomPairSizedOf(prep: DataFrame, nDg: Long, nSh: Long,
       fpp: Double): (Array[Byte], Array[Byte]) = {
+    import org.apache.spark.sql.GraftBridge
+    def limit(conf: String): Long =
+      prep.sparkSession.conf.get(s"spark.sql.optimizer.runtime.bloomFilter.$conf").toLong
+    val (maxItems, maxBits) = (limit("maxNumItems"), limit("maxNumBits"))
+    def bloomAgg(key: org.apache.spark.sql.Column, n: Long): org.apache.spark.sql.Column = {
+      val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, fpp)
+      require(n <= maxItems, s"Bloom sketch of $n items exceeds " +
+        s"spark.sql.optimizer.runtime.bloomFilter.maxNumItems ($maxItems)")
+      require(bits <= maxBits, s"Bloom sketch of $bits bits (n=$n, fpp=$fpp) " +
+        s"exceeds spark.sql.optimizer.runtime.bloomFilter.maxNumBits ($maxBits)")
+      GraftBridge.column(
+        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+          GraftBridge.expression(key),
+          GraftBridge.expression(lit(n)),
+          GraftBridge.expression(lit(bits))).toAggregateExpression())
+    }
     val keys = prep.select(xxhash64(col("__md5")).as("dk"),
       explode_outer(col("sh")).as("k"))
     val built = keys.agg(
-      bloomAggCol(col("dk"), math.max(nDg, 64L), fpp),
-      bloomAggCol(col("k"), math.max(nSh, 64L), fpp)).head()
+      bloomAgg(col("dk"), math.max(nDg, 64L)),
+      bloomAgg(col("k"), math.max(nSh, 64L))).head()
     (built.getAs[Array[Byte]](0), built.getAs[Array[Byte]](1))
   }
 
@@ -825,57 +809,9 @@ object Dedup {
     val freq = materialize(shingleFreq(Seq(bp, cp)))
     val (digestBloom, shingleBloom) = bloomPairSizedOf(cp,
       cp.count(), freq.count(), fpp)
-    dedupIncrementalBloomPrepped(batch, bp, cp, digestBloom, shingleBloom,
-      idCol, threshold, sharedFreq = Some(freq))
-  }
-
-  /** [[dedupIncrementalBloom]] body over prepped sides + prebuilt sketches
-    * — shared with [[dedupIncrementalBloomIndexed]], where the sketches
-    * arrive from the index's snapshot blobs instead of two corpus scans.
-    */
-  private def dedupIncrementalBloomPrepped(
-      batch: DataFrame,
-      bp: DataFrame,
-      cp: DataFrame,
-      digestBloom: Array[Byte],
-      shingleBloom: Array[Byte],
-      idCol: String,
-      threshold: Double,
-      sharedFreq: Option[DataFrame] = None
-  ): DataFrame = {
-    // ONE rarity order + prefix frame per side, as in dedupIncremental
-    // (freq materialized there for the same two-consumer reason; callers
-    // that already built it for sketch sizing pass it in)
-    val freq = sharedFreq.getOrElse(materialize(shingleFreq(Seq(bp, cp))))
-    val bpPrefix = materialize(prefixOf(bp, freq, threshold))
-    val cpPrefix = materialize(prefixOf(cp, freq, threshold))
-    // digest bloom: a pure `might_contain` FILTER ahead of the exact
-    // semi-join — rows the sketch rejects are guaranteed novel; the
-    // maybe-rows are exactly verified. (No materialized flag frame — the
-    // round-5 shape cached a per-id flag column and paid an extra
-    // cache fill + semi join for what one predicate expresses.)
-    val exactHit = bp
-      .where(mightContain(digestBloom, xxhash64(col("__md5"))))
-      .select(col("id"), col("__md5"))
-      .join(cp.select(col("__md5")), Seq("__md5"), "left_semi")
-      .select(col("id"))
-    // shingle bloom: prune the cross pass at PREFIX-ROW granularity — a
-    // batch prefix row whose own shingle is not in the corpus sketch can
-    // never produce a candidate (candidates require an equal corpus
-    // shingle, and EVERY corpus shingle is in the sketch: no false
-    // negatives), so the filter is exact, strictly sharper than the
-    // round-5 per-id flag (it drops non-corpus shingles of flagged docs
-    // too), and a zero-join zero-shuffle projection predicate.
-    val prunedBp = bpPrefix.where(mightContain(shingleBloom, col("shingle")))
-    val nearHit = ppjoinFromPrefixed(cpPrefix, cp,
-        Some((prunedBp, bp)), threshold)
-      .select(col("id_b").as("id"))
-    // as in dedupIncrementalPrepped: ONE anti join over the unioned
-    // exclusion sets; no right-side distincts (anti joins ignore dups)
-    val exclude = dupIdsFromPrepped(bp, threshold, Some(bpPrefix))
-      .unionByName(exactHit).unionByName(nearHit)
-    batch.select(col(idCol))
-      .join(exclude.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+    admit(batch, bp, cp, freq,
+      mightContain(digestBloom, xxhash64(col("__md5"))),
+      mightContain(shingleBloom, col("shingle")), idCol, threshold)
   }
 
   /** SimHash near-dup pairs at production width: `words`×32-bit signatures
@@ -1032,9 +968,9 @@ object Dedup {
   }
 
   /** Candidate-join + verify stages over PRE-BUILT prefix frames — the
-    * entry point that lets [[dedupIncrementalPrepped]] build each side's
-    * prefix once and run both its cross and self passes from the same
-    * cached frames. `a`/payload pairs: (prefix frame, prep frame); self
+    * entry point that lets the incremental admission body build each
+    * side's prefix once and run both its cross and self passes from the
+    * same cached frames. `a`/payload pairs: (prefix frame, prep frame); self
     * mode when `b` is None.
     */
   private def ppjoinFromPrefixed(
@@ -1106,8 +1042,9 @@ object Dedup {
     * as the input row. Shuffles carry lines and id-pairs, never quadratic
     * combinations.
     *
-    * Returns (id, n_lines, n_kept, clean_text); a fully-boilerplate doc
-    * keeps an empty string.
+    * Returns (id, n_lines, n_kept, clean_text), one row per input row; a
+    * fully-boilerplate doc keeps an empty string, and a null-text doc
+    * comes back with n_lines null, n_kept 0 and clean_text "".
     */
   def lineDedup(
       df: DataFrame,
@@ -1121,18 +1058,20 @@ object Dedup {
     // both the lines side and the n_lines side; at 100 TB that second
     // corpus scan is the cost that counts — VERDICT r5 task #7). n_lines
     // rides the exploded rows as one long; split() never returns an empty
-    // array (empty text → [""]), so every doc keeps >= 1 exploded row and
-    // the n_lines frame below covers all ids.
+    // array (empty text → [""]) and the outer explode gives a null-text
+    // doc one (null, null) row, so every doc keeps >= 1 exploded row and
+    // the n_lines frame below covers all ids. A null line never matches
+    // the anti join and is not counted in n_kept.
     val lines = materialize(
       df.select(col(idCol).as("id"), split(col(textCol), "\n").as("__ls"))
         .select(col("id"), size(col("__ls")).cast("long").as("n_lines"),
-          posexplode(col("__ls")).as(Seq("pos", "line"))))
+          posexplode_outer(col("__ls")).as(Seq("pos", "line"))))
     val freq = lines.select(col("id"), col("line")).distinct()
       .groupBy(col("line")).agg(count(lit(1)).as("__df"))
     val boiler = freq.where(col("__df") >= minDocFreq).select(col("line"))
     val kept = lines.join(boiler, Seq("line"), "left_anti")
     val reassembled = kept.groupBy(col("id"))
-      .agg(count(lit(1)).as("n_kept"),
+      .agg(count(col("line")).as("n_kept"),
         concat_ws("\n",
           transform(array_sort(collect_list(struct(col("pos"), col("line")))),
             s => s.getField("line"))).as("clean_text"))

@@ -2,17 +2,11 @@ package graft
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-/** graft natives callable from SQL + SparkSessionExtensions wiring. */
+/** graft natives callable from SQL through the session's function registry. */
 class ExtensionsSpec extends GraftSuite {
   import spark.implicits._
 
-  test("GraftExtensions injects without error (session-build wiring)") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions()(ext) // registers two functions
-  }
-
   test("native expressions callable from spark.sql") {
-    // same registration path the extension uses, applied to this session
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("graft_polyhash",
       exprs => graft.functions.PolyHash(exprs.head), "scala_udf")

@@ -125,9 +125,12 @@ class Round4Spec extends GraftSuite {
     val docs = (1L to 6L).map(i => (i, s"unique line $i\nSHARED BOILERPLATE\nalso unique $i"))
       .toDF("id", "text") // boilerplate in 6 docs
       .unionByName(Seq((7L, "SHARED BOILERPLATE")).toDF("id", "text"))
-    val out = Dedup.lineDedup(docs, "id", "text", minDocFreq = 5L)
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getString(3))).toMap
+      .unionByName(Seq((8L, null: String)).toDF("id", "text"))
+    val rows = Dedup.lineDedup(docs, "id", "text", minDocFreq = 5L).collect()
+    val out = rows.map(r => r.getLong(0) ->
+      (r.get(1), r.getLong(2), r.getString(3))).toMap
+    assert(rows.length == 8 && out.size == 8, "every input id exactly once")
+    assert(out(8L) == ((null, 0L, "")), "null-text doc: n_lines null, nothing kept")
     (1L to 6L).foreach { i =>
       assert(out(i) == ((3L, 2L, s"unique line $i\nalso unique $i")),
         s"doc $i: ${out(i)}")
@@ -410,8 +413,7 @@ class Round4Spec extends GraftSuite {
     graft.text.Dedup.withCache {
       val cp = graft.text.Dedup.prepDocs(corpus, "doc_id", "text", col("lang"), 3)
       val bp = graft.text.Dedup.prepDocs(batch, "doc_id", "text", col("lang"), 3)
-      val digestBloom = graft.text.Dedup.bloomOf(
-        cp.select(xxhash64(col("__md5")).as("k")), "k", 0.03)
+      val (digestBloom, _) = graft.text.Dedup.bloomPairOf(cp, 0.03)
       val maybes = bp.where(graft.text.Dedup.mightContain(
         digestBloom, xxhash64(col("__md5")))).count()
       val total = bp.count()

@@ -102,7 +102,7 @@ class Round6Spec extends GraftSuite {
     import graft.text.Dedup
     val docs = spark.read.parquet(s"$sfSmall/documents.parquet").limit(400)
     Dedup.withCache {
-      val prep = TestAccess.prepDocs(docs, "doc_id", "text", col("lang"), 3)
+      val prep = Dedup.prepFrame(docs, "doc_id", "text", col("lang"), 3)
       val (dg, sh) = Dedup.bloomPairOf(prep, 0.03)
       // the correctness contract: NO false negatives — every corpus
       // digest and every corpus shingle must probe positive (admission
@@ -122,6 +122,23 @@ class Round6Spec extends GraftSuite {
       val back = org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(sh))
       assert(back.bitSize() > 0)
+    }
+  }
+
+  test("bloomPairOf: a sketch above the session's Bloom maxima throws, never clamps") {
+    import graft.text.Dedup
+    val docs = spark.read.parquet(s"$sfSmall/documents.parquet").limit(400)
+    val prep = Dedup.prepFrame(docs, "doc_id", "text", col("lang"), 3)
+    // 400 docs ask for a digest sketch of >= 400 items (~2.9k bits at
+    // fpp 0.03); BloomFilterAggregate would silently build a smaller one
+    for ((conf, v) <- Seq("maxNumItems" -> "100", "maxNumBits" -> "1000")) {
+      val key = s"spark.sql.optimizer.runtime.bloomFilter.$conf"
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, v)
+      try {
+        val e = intercept[IllegalArgumentException](Dedup.bloomPairOf(prep, 0.03))
+        assert(e.getMessage.contains(key), e.getMessage)
+      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
 
@@ -303,6 +320,19 @@ class Round6IngestSpec extends GraftSuite {
         s"day $day: indexed admissions diverge from monolithic recompute")
       admittedSoFar :+= admDocs
     }
+    // the index grown by writeIndex + 3 appendIndex calls == one writeIndex
+    // of the same docs: same signature rows, byte-identical Bloom blobs
+    // (HLL sizing and Bloom inserts are both order-free)
+    val oneShot = root + "_one_shot"
+    scala.reflect.io.Directory(new java.io.File(oneShot)).deleteRecursively()
+    Dedup.writeIndex(admittedSoFar.foldLeft(slice(0))(_ unionByName _),
+      "doc_id", "text", col("lang"), 3, oneShot, nBuckets = 4, bloomFpp = Some(0.03))
+    def rows(r: String) = Dedup.readIndex(spark, r).collect().map(_.toSeq).toSet
+    assert(rows(root) === rows(oneShot), "grown and one-shot index rows differ")
+    for (k <- Seq("bloom-digest", "bloom-shingle"))
+      assert(graft.lake.IcebergLite.getBlob(root, k).get
+        .sameElements(graft.lake.IcebergLite.getBlob(oneShot, k).get),
+        s"$k: grown and one-shot index blobs differ")
   }
 }
 
@@ -321,13 +351,4 @@ object TestAccess {
           .as(Seq("pos0", "wh")))
       .select(col("id"), (col("pos0") + 1).as("pos"), col("wh"))
   }
-
-  def prepDocs(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, blockKey: org.apache.spark.sql.Column,
-      shingleN: Int): org.apache.spark.sql.DataFrame =
-    df.select(
-      col(idCol).as("id"), blockKey.as("blk"),
-      graft.text.TextHash.sortedShingleHashes(col(textCol), shingleN).as("sh"),
-      md5(col(textCol)).as("__md5"))
-      .withColumn("sz", size(col("sh")))
 }
